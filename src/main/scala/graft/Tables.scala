@@ -49,8 +49,8 @@ object Tables {
       // and it is consulted again at EXECUTION time (per-file footer
       // conversion), so a set-and-restore around this call could break
       // the actual row read later. The library therefore never mutates
-      // it: every repo entry point (Verify/Bench/Profile/TestSpark)
-      // sets it at session BUILD, and an ad-hoc session hitting a
+      // it: graft.GraftSession sets it at session BUILD for every repo
+      // entry point, and an ad-hoc session hitting a
       // nanos-generation file gets an actionable error instead of a
       // silent session-wide conf flip (r8 verdict watch item).
       val df =
@@ -61,8 +61,8 @@ object Tables {
               throw new IllegalStateException(
                 s"$dir/$name.parquet carries TIMESTAMP(NANOS) columns: " +
                 "set spark.sql.legacy.parquet.nanosAsLong=true when " +
-                "BUILDING the SparkSession (as graft.Verify/Bench/" +
-                "Profile do) — Tables.load no longer flips this " +
+                "BUILDING the SparkSession (as graft.GraftSession " +
+                "does) — Tables.load no longer flips this " +
                 "session-wide conf on the caller's behalf", e)
         }
       import org.apache.spark.sql.functions.{col, expr}

@@ -291,16 +291,7 @@ object CorpusMain {
       "usage: CorpusMain <sfDir> <outDir> [--incremental]")
     // an unrecognized third arg must fail fast: falling through to the
     // batch path would overwrite an existing incremental table layout
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-corpus")
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-corpus")
     val docs = graft.Tables.load(spark, args(0), "documents")
     if (args.length == 3 && args(2) == "--incremental") {
       // outDir is a LakehouseTable: repeated runs dedup against what

@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the reference-parity medallion run (the counterpart
   * of the reference's Glue `main()`, glue_etl.py:525-694):
   *
@@ -30,29 +28,9 @@ object EtlMain {
     require(args.length == 4,
       "usage: EtlMain <productsCsv> <ordersCsv> <orderItemsCsv> <warehouse>")
     val Array(productsCsv, ordersCsv, itemsCsv, warehouse) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      // layer databases' metadata dirs live inside the warehouse arg
-      .config("spark.sql.warehouse.dir", s"$warehouse/_catalog")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // v2 commits each task's files task-side (parallel) instead of
-      // the driver serially moving every task dir at job commit. v2's
-      // weaker guarantee — a failed JOB can leave partial files in the
-      // output dir — is immaterial here: every LakehouseTable write
-      // lands in a PRIVATE staged dir that only an atomic rename
-      // publishes, so a partial staged dir is abandoned, never read
-      // (vacuum sweeps it). Measured at the sf0.1 rehearsal scale it
-      // buys ~25% on the ingest+upsert stage (many-partition commits);
-      // partition-dir creation itself still bounds the summary writes.
-      .config("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // layer databases' metadata dirs live inside the warehouse arg
+    val spark = graft.GraftSession("graft-etl",
+      warehouseDir = Some(s"$warehouse/_catalog"))
 
     val pipe = new EcommercePipeline(spark, warehouse)
     val results = timed("bronze_silver") {
@@ -221,7 +199,6 @@ object EtlMain {
     // registry keys on the scan's root path, their SQL aggregates over
     // silver.orders are served from it without knowing it exists
     summaryT.registerAs("gold.orders_date_summary")
-    graft.plans.MaterializedAgg.attach(spark)
     graft.plans.MaterializedAgg.register(spark, pipe.silverOrders.path,
       summaryPath, Seq("date"), Seq("total_amount"))
     val probe = pipe.silverOrders.read.groupBy(org.apache.spark.sql.functions.col("date"))

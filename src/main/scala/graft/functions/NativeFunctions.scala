@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -773,12 +774,18 @@ object NativeFunctions {
      exprs => Md5Bits(exprs.head, constInt(exprs(1), "graft_md5_bits nHex"))))
 
   /** Idempotent per-session registration; expressions are then usable
-    * from both the Column API (call_function) and spark.sql. */
-  def register(spark: SparkSession): Unit =
+    * from both the Column API (call_function) and spark.sql. Names the
+    * session already resolves are skipped — all of them on a
+    * [[GraftExtensions]] session — so the operators' repeat calls
+    * replace nothing (and log no "replaced a previously registered
+    * function" warning). */
+  def register(spark: SparkSession): Unit = {
+    val fr = spark.sessionState.functionRegistry
     registry.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
+      if (!fr.functionExists(FunctionIdentifier(name)))
+        fr.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+  }
 
   /** Packed sign-bit LSH signature (see [[LshSignBits]]). */
   def lshBits(v: Column, nbits: Int): Column =

@@ -133,9 +133,8 @@ object Checkpoints {
 
   /** Second block-bounded layout of an already-measured checkpoint:
     * repartition `checkpointed` by `keys` into enough partitions to
-    * keep blocks at `targetBytes` (floored at the session's shuffle
-    * parallelism), optionally sort within partitions, eagerly
-    * checkpoint the copy, and ONLY THEN release the superseded
+    * keep blocks at `targetBytes`, optionally sort within partitions,
+    * eagerly checkpoint the copy, and ONLY THEN release the superseded
     * original — the materialize-before-release ordering is the
     * invariant this helper exists to keep in one place (a released
     * checkpoint cannot be recomputed). Sized from the original's

@@ -265,7 +265,12 @@ object PageRank {
       // delta join and the next contribution pass exchange-free
       val checkpointed = Checkpoints.checkpointKeepingLayout(tracked)
       it += 1
-      if (willCheck) converged = deltaAcc.value <= effTol.get
+      if (willCheck) {
+        // n > 0 rows flowed through the tracking UDF; an untouched
+        // accumulator reads -Infinity and would stop the loop early
+        require(!deltaAcc.isZero, "PageRank: convergence delta was never tracked")
+        converged = deltaAcc.value <= effTol.get
+      }
       prevCheckpoint.foreach(Checkpoints.release)
       prevCheckpoint = Some(checkpointed)
       rank = checkpointed

@@ -99,6 +99,32 @@ object MaterializedAgg {
   private val joinRegistry =
     new ConcurrentHashMap[Set[Set[String]], List[JoinSummary]]()
 
+  /** Read a table path the way [[graft.tables.LakehouseTable.read]]
+    * and `registerAs` do: partition discovery for a partitioned table,
+    * recursive lookup for an unpartitioned one. A discovery read of an
+    * unpartitioned table sees only the files directly under the path —
+    * none at all once `compact()` moved them under `compacted-<tag>/`
+    * (UNABLE_TO_INFER_SCHEMA), a subset while `appendBatch` dirs sit
+    * beside them. A partitioned table keeps its one discovery listing;
+    * only an unpartitioned one is listed again. */
+  private def readTable(spark: SparkSession, path: String): DataFrame = {
+    def recursive = spark.read.option("recursiveFileLookup", "true").parquet(path)
+    try {
+      val df = spark.read.parquet(path)
+      df.queryExecution.analyzed match {
+        case lr: LogicalRelation => lr.relation match {
+          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation
+              if fs.partitionSchema.nonEmpty => df
+          case _ => recursive
+        }
+        case _ => recursive
+      }
+    } catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => recursive
+    }
+  }
+
   private def rootsOf(plan: LogicalPlan): Option[Set[String]] = plan match {
     case lr: LogicalRelation =>
       lr.relation match {
@@ -171,7 +197,7 @@ object MaterializedAgg {
                    groupCols: Seq[String], measures: Seq[String]): Unit = {
     require(dims.nonEmpty, "registerStar needs at least one dim")
     def scanOf(p: String): (Set[String], Set[String]) = {
-      val plan = spark.read.parquet(p).queryExecution.analyzed
+      val plan = readTable(spark, p).queryExecution.analyzed
       val r = rootsOf(plan).getOrElse(throw new IllegalArgumentException(
         s"$p must be a parquet scan"))
       (r, plan.output.map(_.name.toLowerCase).toSet)
@@ -206,7 +232,7 @@ object MaterializedAgg {
         s"summary column '$n' must resolve to exactly one star input; " +
         s"found it in $hits of ${inputCols.size} — rebuild and re-register")
     }
-    spark.read.parquet(summaryPath).queryExecution.analyzed match {
+    readTable(spark, summaryPath).queryExecution.analyzed match {
       case lr: LogicalRelation =>
         val have = lr.output.map(_.name.toLowerCase).toSet
         // groupCols too, not just the aggregate columns: a summary
@@ -242,8 +268,8 @@ object MaterializedAgg {
     * `sourcePath.groupBy(groupCols).agg(...)` over `measures`. */
   def register(spark: SparkSession, sourcePath: String, summaryPath: String,
                groupCols: Seq[String], measures: Seq[String]): Unit = {
-    val srcPlan = spark.read.parquet(sourcePath).queryExecution.analyzed
-    val sumPlan = spark.read.parquet(summaryPath).queryExecution.analyzed
+    val srcPlan = readTable(spark, sourcePath).queryExecution.analyzed
+    val sumPlan = readTable(spark, summaryPath).queryExecution.analyzed
     (rootsOf(srcPlan), sumPlan) match {
       case (Some(roots), lr: LogicalRelation) =>
         val have = lr.output.map(_.name.toLowerCase).toSet
@@ -271,7 +297,7 @@ object MaterializedAgg {
   }
 
   def deregister(spark: SparkSession, sourcePath: String): Unit =
-    rootsOf(spark.read.parquet(sourcePath).queryExecution.analyzed)
+    rootsOf(readTable(spark, sourcePath).queryExecution.analyzed)
       .foreach(registry.remove)
 
   /** Drop only the registration of ONE logical shape (grain +
@@ -289,7 +315,7 @@ object MaterializedAgg {
                               measures: Seq[String]): Unit = {
     val g = groupCols.map(_.toLowerCase).toSet
     val m = measures.map(_.toLowerCase).toSet
-    rootsOf(spark.read.parquet(sourcePath).queryExecution.analyzed)
+    rootsOf(readTable(spark, sourcePath).queryExecution.analyzed)
       .foreach { roots =>
         registry.compute(roots, (_, v) =>
           if (v == null) null
@@ -509,14 +535,14 @@ object MaterializedAgg {
     // The rebuilt plan's aggregate sits over a Join, which the PLAIN
     // rewrite's unwrap bails on, so plain registrations of the fact
     // path cannot capture it and may stay.
-    val dimPlan = fact.spark.read.parquet(dimPath).queryExecution.analyzed
+    val dim = readTable(fact.spark, dimPath)
+    val dimPlan = dim.queryExecution.analyzed
     val dimRoots = rootsOf(dimPlan).getOrElse(
       throw new IllegalArgumentException(s"$dimPath must be a parquet scan"))
     rootsOf(factRead.queryExecution.analyzed).foreach { factRoots =>
       deregisterJoinShape(Set(factRoots, dimRoots), groupCols, measures,
         Seq(DimSpec(dimRoots, factKey.toLowerCase, dimKey.toLowerCase)))
     }
-    val dim = fact.spark.read.parquet(dimPath)
     val slice = factRead.filter(col(groupCols.head).isInCollection(changed))
     val rebuilt = buildStar(slice, Seq((dim, factKey, dimKey)),
                             groupCols, measures)

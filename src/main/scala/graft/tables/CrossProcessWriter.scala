@@ -1,7 +1,5 @@
 package graft.tables
 
-import org.apache.spark.sql.SparkSession
-
 /** Forked-JVM writer for the cross-PROCESS concurrency rehearsal
   * (CrossProcessSpec). The optimistic-concurrency protocol's
   * atomicity assumptions — create-exclusive commit records, atomic
@@ -40,15 +38,7 @@ object CrossProcessWriter {
     val mode = args(0)
     val table = args(1)
     val syncDir = new java.io.File(args(args.length - 1))
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-xproc-writer")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession("graft-xproc-writer", cpus = 2)
     import spark.implicits._
 
     syncDir.mkdirs()

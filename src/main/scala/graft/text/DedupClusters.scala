@@ -56,8 +56,14 @@ object DedupClusters {
                   org.apache.spark.sql.types.ByteType).contains(dt),
         s"DedupClusters needs integral pair ids; '$c' is $dt")
     }
-    val a = col("id_a").cast("long")
-    val b = col("id_b").cast("long")
+    // a NULL id fails the edge-explode pass itself (no extra job):
+    // left through, it would drop out of the label joins and the final
+    // coalesce would fabricate an id-0 row
+    def id(c: String) = when(col(c).isNull, raise_error(lit(
+      s"DedupClusters needs non-NULL pair ids; found a NULL '$c'")))
+      .otherwise(col(c).cast("long"))
+    val a = id("id_a")
+    val b = id("id_b")
     // ONE pass over the (expensive, derived) pair pipeline emits the
     // gather edge list: both directions PLUS a self-loop per endpoint
     // — the self-loop is what lets a round be a plain join+min with no
@@ -84,7 +90,9 @@ object DedupClusters {
     val round1 = edgesM.groupBy(col("dst").as("id"))
       .agg(min("src").as("cluster_id"))
     // fixpoint ⟺ labels constant per component ⟺ per-edge label
-    // equality (self-loops compare trivially equal); one tiny job
+    // equality (self-loops compare trivially equal); each call is two
+    // O(E) joins over the edge checkpoint (the dst-side one re-exchanges
+    // edgesM, which is laid out by src), paid once per batch
     def atFixpoint(lbl: DataFrame): Boolean =
       edgesM
         .join(lbl.select(col("id").as("src"), col("cluster_id").as("la")),

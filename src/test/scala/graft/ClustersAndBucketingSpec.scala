@@ -21,6 +21,15 @@ class ClustersAndBucketingSpec extends AnyFunSuite {
     assert(surv == Set(1L, 4L, 5L, 7L))
   }
 
+  test("connected components fail loudly on a NULL pair id") {
+    val pairs = Seq((Some(1L), Some(2L)), (None, Some(3L))).toDF("id_a", "id_b")
+    val e = intercept[Exception](
+      DedupClusters.connectedComponents(pairs).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("NULL 'id_a'")), e)
+  }
+
   test("connected components converge on a long chain (diameter > 1 iter)") {
     val chain = (1L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val comps = DedupClusters.connectedComponents(chain)

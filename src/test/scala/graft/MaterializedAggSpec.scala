@@ -451,6 +451,35 @@ class MaterializedAggSpec extends AnyFunSuite {
     } finally MaterializedAgg.clear()
   }
 
+  test("registerJoin over a compacted unpartitioned dim registers and serves") {
+    // compact() folds an unpartitioned table's files under
+    // compacted-<tag>/ — the layout a plain partition-discovery read
+    // of the dim path cannot infer a schema from
+    val dir = TestSpark.tmpDir("mvjoincompacted")
+    val fact = graft.tables.LakehouseTable(spark, s"$dir/fact", Seq("id"), Seq("date"))
+    fact.overwrite(Seq((1, "d1", 10, 100L), (2, "d1", 11, 200L), (3, "d2", 10, 50L))
+      .toDF("id", "date", "product_id", "amount"))
+    val dim = graft.tables.LakehouseTable(spark, s"$dir/dim", Seq("pid"))
+    dim.overwrite(Seq((10, "b0")).toDF("pid", "brand"))
+    dim.append(Seq((11, "b1")).toDF("pid", "brand"))
+    dim.compact(512L * 1024 * 1024)
+    assert(new java.io.File(s"$dir/dim").list().exists(_.startsWith("compacted-")))
+    MaterializedAgg.buildJoin(fact.read, dim.read, "product_id", "pid",
+      Seq("date", "brand"), Seq("amount")).write.parquet(s"$dir/gold")
+    MaterializedAgg.registerJoin(spark, fact.path, dim.path,
+      "product_id", "pid", s"$dir/gold", Seq("date", "brand"), Seq("amount"))
+    try {
+      val f = fact.read
+      val d = dim.read
+      val q = f.join(d, f("product_id") === d("pid"))
+        .groupBy($"brand").agg(sum($"amount").as("revenue"))
+      assert(scanPaths(q).nonEmpty && scanPaths(q).forall(_.contains("gold")),
+        scanPaths(q))
+      assert(q.orderBy("brand").as[(String, Long)].collect().toSeq ==
+        Seq(("b0", 150L), ("b1", 200L)))
+    } finally MaterializedAgg.clear()
+  }
+
   test("SQL-text join over catalog table names is served by the join summary") {
     val dir = TestSpark.tmpDir("mvjsql")
     val fact = graft.tables.LakehouseTable(spark, s"$dir/fact", Seq("id"))

@@ -9,6 +9,22 @@ class NativeFunctionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  test("register adds only missing functions; a second call replaces nothing") {
+    val s = spark.newSession()
+    val fr = s.sessionState.functionRegistry
+    val ids = NativeFunctions.registry.map(f =>
+      org.apache.spark.sql.catalyst.FunctionIdentifier(f._1))
+    // the extension already resolves every name: drop a few so the
+    // first call has work to do
+    ids.take(3).foreach(fr.dropFunction)
+    NativeFunctions.register(s)
+    val infos = ids.map(id => fr.lookupFunction(id).getOrElse(fail(s"$id missing")))
+    NativeFunctions.register(s)
+    ids.zip(infos).foreach { case (id, info) =>
+      assert(fr.lookupFunction(id).exists(_ eq info), s"$id was re-registered")
+    }
+  }
+
   test("graft_dot equals the zip_with+aggregate formulation bit-for-bit") {
     NativeFunctions.register(spark)
     val df = Ctx(spark, "/root/testdata/sf0.001").embeddings

@@ -3,27 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // config-path extension injection: ExtensionsAndJsonSpec asserts
-      // the graft_* functions resolve in SQL text because of this line
-      // (per-session register() calls would mask a broken extension)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // database metadata dirs (registerAs("db.table")) land in tmp,
-      // not a spark-warehouse dir polluting the repo checkout
-      .config("spark.sql.warehouse.dir", tmpDir("warehouse"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // database metadata dirs (registerAs("db.table")) land in tmp, not a
+  // spark-warehouse dir polluting the repo checkout.
+  // ExtensionsAndJsonSpec asserts the graft_* functions resolve in SQL
+  // text because the factory injects GraftExtensions.
+  lazy val spark: SparkSession =
+    GraftSession("graft-test", cpus = 4, warehouseDir = Some(tmpDir("warehouse")))
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
